@@ -235,9 +235,12 @@ def minhash_lsh_pairs(
     exact-Jaccard verify on the candidate set only. Returns
     (id_a, id_b, jaccard) with id_a < id_b and jaccard >= threshold.
 
-    With r = num_hashes/bands rows per band, P(candidate) = 1-(1-j^r)^bands —
-    e.g. r=2, bands=16: ~1-3e-12 at j=0.9, so LSH misses are negligible above
-    the 0.8 threshold and the output equals the exhaustive exact-Jaccard scan.
+    With r = num_hashes/bands rows per band, P(candidate) = 1-(1-j^r)^bands.
+    The output equals the exhaustive exact-Jaccard scan only when misses
+    are negligible, as with bands=16 (r=2): ~1-3e-12 at j=0.9. The
+    default of 8 bands x 4 rows misses a pair with probability (1-j^4)^8,
+    ~0.3% at j=0.85, so its output is a subset of the exhaustive scan;
+    pass bands=16 where every pair above the threshold must be found.
 
     Scale: the self-join shuffles 20-byte rows; verification re-shingles only
     candidate documents (semi-join pruned, broadcast when small).
@@ -935,9 +938,11 @@ def setsim_join_pairs(
     # Build verify token arrays for CANDIDATE docs only (guide §3.2: prune
     # the big side before its shuffle): non-candidate ids can never match
     # the verify equi-joins, so the collect_list agg — previously one
-    # sorted array per CORPUS document — shuffles only touched docs. The
-    # probe ids broadcast (candidate pairs are small by construction), so
-    # the prune costs no extra exchange on toks.
+    # sorted array per CORPUS document — shuffles only touched docs. No
+    # broadcast hint is applied: the probe ids broadcast (and the prune
+    # costs no extra exchange on toks) only while they fit under
+    # spark.sql.autoBroadcastJoinThreshold; above it the semi-join plans
+    # as a shuffle join, adding exchanges on toks.
     touched = cand.select(F.col("da").alias("cid")).union(
         cand.select(F.col("db").alias("cid"))
     )
@@ -1025,7 +1030,7 @@ def exact_substring_spans(
                             "exact_substring_spans: id out of [0, 2^31) "
                             "packing range: "
                         ),
-                        F.col(id_col).cast("string"),
+                        F.coalesce(F.col(id_col).cast("string"), F.lit("NULL")),
                     )
                 )
             )

@@ -20,8 +20,9 @@ machinery with plain parquet + Catalyst:
 - ``acid_delete`` / ``acid_update`` write ``delete_delta_N_N`` holding
   ONLY the victim ROW__IDs (updates also write the re-inserted rows as
   a new delta — Hive's exact update-as-delete+insert rewrite).
-- ``acid_read`` is the merge-on-read: union of deltas with write_id ≤
-  the snapshot bound, anti-joined against the delete-delta ROW__IDs.
+- ``acid_read`` is the merge-on-read: one scan of the base and deltas
+  with write_id ≤ the snapshot bound, anti-joined against the
+  delete-delta ROW__IDs.
   Passing ``up_to_write_id`` gives snapshot-isolation time travel —
   the reader sees exactly the committed state as of that write, the
   same contract AcidUtils' ValidTxnList enforces.
@@ -32,24 +33,42 @@ machinery with plain parquet + Catalyst:
   base + delta + delete_delta, and (as in Hive) time travel inside a
   merged range is no longer reconstructable.
 
-Scale notes (100 TB): delete deltas hold 3 longs per victim, so the
-anti-join build side is small → broadcast (plan-pinned in tests); the
-read path scans each delta once with no shuffle beyond that join.
-Write-id allocation is a directory listing (max+1) — single-writer
-semantics, as Hive's metastore txn manager would otherwise arbitrate;
-a real deployment gates writers through a lock service exactly like
-TxnHandler.java does. Compaction preserves bucket numbers so bucketed
-join co-location survives, mirroring the reference compactor.
+Scale notes (100 TB): a snapshot is TWO parquet relations — one scan
+of base + every delta ≤ the bound, one of every delete delta — joined by
+a broadcast left-anti join on ROW__ID (delete deltas hold 3 longs per
+victim, so the build side is small; plan-pinned in tests). Both scans
+take their schema as given, never by inference: the table schema comes
+from the Spark row-metadata key (``org.apache.spark.sql.parquet.row.
+metadata``) of one data-file footer, read on the driver with pyarrow —
+the same field Spark's own inference reads, minus the one-task
+footer-reading job per directory — and delete deltas use the fixed
+``ROWID_SCHEMA``. So building a read launches no Spark job (below
+Spark's 32-path parallel-listing threshold; compaction keeps the
+directory count there) and the table directory holds nothing but data. This is OrcRawRecordMerger's
+contract: base and deltas merge under the ONE table schema the
+metastore holds (StorageDescriptor cols). Writers keep that schema:
+``acid_update`` casts every SET expression to its column's type (Hive's
+assignment cast) and ``acid_insert`` into an existing table casts
+same-named columns and rejects a missing or extra column, so every
+delta reads under the one schema. Write-id allocation is a directory
+listing (max+1) — single-writer semantics, as Hive's metastore txn
+manager would otherwise arbitrate; a real deployment gates writers
+through a lock service exactly like TxnHandler.java does. Compaction
+preserves bucket numbers so bucketed join co-location survives,
+mirroring the reference compactor.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 __all__ = [
     "acid_insert",
@@ -61,6 +80,10 @@ __all__ = [
 ]
 
 _ROWID = ["_orig_write_id", "_bucket", "_row_id"]
+ROWID_SCHEMA = StructType([StructField(c, LongType()) for c in _ROWID])
+# the footer key Spark's parquet writer stores its Catalyst schema under
+# (ParquetReadSupport.SPARK_METADATA_KEY); schema inference reads it too
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _dirs(path: str) -> list[tuple[str, int, int, str]]:
@@ -90,6 +113,26 @@ def _next_write_id(path: str) -> int:
     return (ids[-1] + 1) if ids else 1
 
 
+def _table_schema(path: str) -> StructType | None:
+    """The table schema (user columns + ROW__ID), or None for a table
+    with no base/delta yet. It is Spark's own row metadata in one
+    data-file footer of the first base/delta, read on the driver, so no
+    Spark job runs; Spark writes a schema-carrying file even for an
+    empty result, so every base/delta has one."""
+    live = [name for kind, _, _, name in _dirs(path) if kind != "delete_delta"]
+    if not live:
+        return None
+    d = os.path.join(path, live[0])
+    part = next(
+        n for n in sorted(os.listdir(d))
+        if n.endswith(".parquet") and not n.startswith(("_", "."))
+    )
+    meta = pq.read_metadata(os.path.join(d, part)).metadata or {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        raise ValueError(f"ACID table {path!r}: {live[0]} was not written by Spark")
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+
+
 def _stamp_row_ids(df: DataFrame, write_id: int) -> DataFrame:
     """ROW__ID per OrcRecordUpdater: (originating write id, bucket, row
     ordinal within bucket). monotonically_increasing_id() is documented
@@ -109,8 +152,23 @@ def _stamp_row_ids(df: DataFrame, write_id: int) -> DataFrame:
 
 
 def acid_insert(df: DataFrame, path: str) -> int:
-    """INSERT → a new ``delta_N_N`` directory; returns the write id."""
+    """INSERT → a new ``delta_N_N`` directory; returns the write id.
+    Into an existing table, columns match by name and cast to the table
+    type; a missing or extra column raises (one schema reads every
+    delta, so a mismatch would otherwise read back as NULLs)."""
     wid = _next_write_id(path)
+    schema = _table_schema(path)
+    if schema is not None:
+        cols = [f for f in schema.fields if f.name not in _ROWID]
+        names = {f.name for f in cols}
+        missing = [f.name for f in cols if f.name not in df.columns]
+        extra = [c for c in df.columns if c not in names]
+        if missing or extra:
+            raise ValueError(
+                f"acid_insert into {path!r}: missing columns {missing}, "
+                f"extra columns {extra}"
+            )
+        df = df.select([F.col(f.name).cast(f.dataType).alias(f.name) for f in cols])
     os.makedirs(path, exist_ok=True)
     _stamp_row_ids(df, wid).write.mode("errorifexists").parquet(
         os.path.join(path, f"delta_{wid:07d}_{wid:07d}")
@@ -121,16 +179,17 @@ def acid_insert(df: DataFrame, path: str) -> int:
 def _read_with_rowids(
     spark: SparkSession, path: str, up_to_write_id: int | None = None
 ) -> DataFrame:
-    """The one merge-on-read implementation: base+deltas ≤ bound minus
-    delete-delta ROW__IDs (broadcast anti-join; 3 longs per victim)."""
+    """The one merge-on-read implementation: ONE scan of base+deltas ≤
+    bound under the table schema, minus ONE scan of the delete-delta
+    ROW__IDs (broadcast anti-join; 3 longs per victim). A ROW__ID is
+    deleted at most once — a delete only selects live rows — so the
+    build side needs no distinct."""
     bound = up_to_write_id if up_to_write_id is not None else float("inf")
     dirs = _dirs(path)
     live, dead = [], []
     for kind, _, mx, name in dirs:
-        if mx > bound:
-            continue
-        df = spark.read.parquet(os.path.join(path, name))
-        (dead if kind == "delete_delta" else live).append(df)
+        if mx <= bound:
+            (dead if kind == "delete_delta" else live).append(name)
     if not live:
         if dirs:
             raise ValueError(
@@ -139,14 +198,14 @@ def _read_with_rowids(
                 "base/delta was cleaned by compaction"
             )
         raise ValueError(f"ACID table {path!r} has no committed data")
-    rows = live[0]
-    for df in live[1:]:
-        rows = rows.unionByName(df)
+    rows = spark.read.schema(_table_schema(path)).parquet(
+        *[os.path.join(path, name) for name in live]
+    )
     if dead:
-        victims = dead[0].select(_ROWID)
-        for df in dead[1:]:
-            victims = victims.unionByName(df.select(_ROWID))
-        rows = rows.join(F.broadcast(victims.distinct()), _ROWID, "left_anti")
+        victims = spark.read.schema(ROWID_SCHEMA).parquet(
+            *[os.path.join(path, name) for name in dead]
+        )
+        rows = rows.join(F.broadcast(victims), _ROWID, "left_anti")
     return rows
 
 
@@ -171,9 +230,14 @@ def acid_delete(spark: SparkSession, path: str, predicate) -> int:
 def acid_update(spark: SparkSession, path: str, predicate, set_map: dict) -> int:
     """UPDATE WHERE → Hive's delete+insert rewrite in ONE write id: the
     victims' ROW__IDs land in ``delete_delta_N_N`` and their re-stamped
-    new versions in ``delta_N_N``."""
+    new versions in ``delta_N_N``. SET values are Columns, cast to their
+    column's table type."""
     wid = _next_write_id(path)
     snap = _read_with_rowids(spark, path).where(predicate)
+    types = {f.name: f.dataType for f in snap.schema.fields if f.name not in _ROWID}
+    unknown = [c for c in set_map if c not in types]
+    if unknown:
+        raise ValueError(f"acid_update of {path!r}: SET names no table column {unknown}")
     # one pass is read twice (ROW__IDs + new versions); keep it cheap.
     # CORRECTNESS, not optimization — deliberately NOT plan_checkpoint /
     # SPARK_GRAFT_LINEAGE-toggleable: the second read happens AFTER the
@@ -185,8 +249,12 @@ def acid_update(spark: SparkSession, path: str, predicate, set_map: dict) -> int
     )
     # withColumns = ONE projection: every SET expression evaluates
     # against the OLD row (SQL UPDATE's simultaneous assignment), so
-    # {"a": lit(0), "b": col("a")} writes b = old a regardless of order
-    fresh = snap.drop(*_ROWID).withColumns(dict(set_map))
+    # {"a": lit(0), "b": col("a")} writes b = old a regardless of order.
+    # Each value casts to its column's type (Hive's assignment cast): one
+    # schema reads every delta, so a delta may not change a column type.
+    fresh = snap.drop(*_ROWID).withColumns(
+        {c: e.cast(types[c]) for c, e in set_map.items()}
+    )
     _stamp_row_ids(fresh, wid).write.mode("errorifexists").parquet(
         os.path.join(path, f"delta_{wid:07d}_{wid:07d}")
     )
@@ -214,13 +282,14 @@ def acid_compact(spark: SparkSession, path: str, major: bool = True) -> int:
     # (Hive's Worker without delete resolution) — the read-side merge
     # fan-in shrinks to at most base + delta + delete_delta. As in Hive,
     # time travel INSIDE a merged range is no longer reconstructable.
-    for kind in ("delta", "delete_delta"):
+    schemas = {"delta": _table_schema(path), "delete_delta": ROWID_SCHEMA}
+    for kind, schema in schemas.items():
         group = [d for d in _dirs(path) if d[0] == kind]
         if len(group) < 2:
             continue
         lo = min(mn for _, mn, _, _ in group)
         hi = max(mx for _, _, mx, _ in group)
-        merged = spark.read.parquet(
+        merged = spark.read.schema(schema).parquet(
             *[os.path.join(path, name) for _, _, _, name in group]
         )
         tmp = os.path.join(path, f"_compact_tmp_{kind}_{hi:07d}")

@@ -134,3 +134,102 @@ def test_read_plan_broadcasts_delete_deltas(spark, tmp_path):
 def test_empty_table_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="no committed data"):
         acid_read(spark, str(tmp_path / "missing"))
+
+
+def _many_dirs(spark, root):
+    """base + 3 deltas + 2 delete deltas (one of them empty)."""
+    _seed(spark, root)
+    acid_compact(spark, root, major=True)
+    for j in range(3):
+        acid_insert(
+            spark.createDataFrame(
+                [(200 + 10 * j + i, f"d{j}", i) for i in range(10)],
+                "k int, s string, v int",
+            ),
+            root,
+        )
+    acid_delete(spark, root, F.col("k") < 20)
+    acid_delete(spark, root, F.col("k") < 0)  # matches nothing
+
+
+def test_read_builds_without_spark_jobs(spark, tmp_path):
+    """Building a snapshot over base + 3 deltas + 2 delete deltas takes
+    every schema from metadata: no schema-inference job per directory."""
+    root = str(tmp_path / "t")
+    _many_dirs(spark, root)
+    assert len([n for n in os.listdir(root) if n.startswith("delta_")]) == 3
+    assert len([n for n in os.listdir(root) if n.startswith("delete_delta_")]) == 2
+    sc = spark.sparkContext
+    group = f"acid-read-build-{tmp_path.name}"
+    sc.setJobGroup(group, "acid_read build")
+    try:
+        df = acid_read(spark, root)
+        built = list(sc.statusTracker().getJobIdsForGroup(group))
+        assert df.count() == 100 - 20 + 30
+        ran = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert built == [], built
+    assert ran, "the job group saw no job: the counter itself is broken"
+
+
+def test_read_plan_one_scan_per_side(spark, tmp_path):
+    """One parquet relation for base + deltas, one for every delete
+    delta: no per-directory scans and no Union."""
+    root = str(tmp_path / "t")
+    _many_dirs(spark, root)
+    plan = acid_read(spark, root)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 2, plan
+    assert "Union" not in plan, plan
+    assert "InMemoryFileIndex(4 paths)" in plan, plan  # base + 3 deltas
+    assert "InMemoryFileIndex(2 paths)" in plan, plan  # 2 delete deltas
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+
+
+def test_zero_row_statements_leave_table_readable(spark, tmp_path):
+    root = str(tmp_path / "t")
+    _seed(spark, root, n=10)
+    acid_delete(spark, root, F.col("k") < 0)
+    acid_update(spark, root, F.col("k") > 1000, {"v": F.lit(0)})
+    assert acid_read(spark, root).count() == 10
+    acid_compact(spark, root, major=False)
+    assert acid_read(spark, root).count() == 10
+    # every row deleted, then compacted into an empty base
+    acid_delete(spark, root, F.lit(True))
+    acid_compact(spark, root, major=True)
+    assert acid_read(spark, root).count() == 0
+    acid_insert(spark.createDataFrame([(1, "a", 2)], "k int, s string, v int"), root)
+    assert acid_read(spark, root).count() == 1
+
+
+def test_update_casts_to_table_type(spark, tmp_path):
+    """Hive's assignment cast: SET v = 2.5 on an int column writes int."""
+    root = str(tmp_path / "t")
+    _seed(spark, root, n=5)
+    acid_update(spark, root, F.col("k") == 2, {"v": F.lit(2.5)})
+    cur = acid_read(spark, root)
+    assert dict(cur.dtypes)["v"] == "int"
+    assert cur.where("k = 2").head()["v"] == 2
+    with pytest.raises(ValueError, match="nope"):
+        acid_update(spark, root, F.col("k") == 2, {"nope": F.lit(1)})
+
+
+def test_insert_casts_and_rejects_mismatch(spark, tmp_path):
+    root = str(tmp_path / "t")
+    _seed(spark, root, n=5)
+    # same names, other types and order: cast to the table's types
+    acid_insert(
+        spark.createDataFrame([(7.0, 50, "x")], "v double, k bigint, s string"), root
+    )
+    cur = acid_read(spark, root)
+    assert cur.dtypes == [("k", "int"), ("s", "string"), ("v", "int")]
+    assert cur.where("k = 50").head()["v"] == 7
+    with pytest.raises(ValueError, match="'v'"):  # missing column
+        acid_insert(spark.createDataFrame([(1, "a")], "k int, s string"), root)
+    with pytest.raises(ValueError, match="'w'"):  # extra column
+        acid_insert(
+            spark.createDataFrame([(1, "a", 1, 1)], "k int, s string, v int, w int"),
+            root,
+        )
+    assert acid_write_ids(root) == [1, 2]

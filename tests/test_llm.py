@@ -2293,6 +2293,16 @@ def test_exact_substring_spans_planted(spark):
             assert counts[t[p : p + L]] >= 2, (r, p)
 
 
+def test_exact_substring_spans_null_id_raises(spark):
+    """A NULL id fails loudly with a message naming it, not with a NULL
+    error message."""
+    df = spark.createDataFrame(
+        [(1, "x" * 80), (None, "y" * 80)], "doc_id bigint, text string"
+    )
+    with pytest.raises(Exception, match=r"packing range: NULL"):
+        dedup.exact_substring_spans(df, min_len=50).collect()
+
+
 def test_cut_spans_removes_planted(spark):
     L = 50
     shared = "S" * (L + 5)

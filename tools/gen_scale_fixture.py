@@ -35,6 +35,12 @@ import pyarrow.parquet as pq
 SRC = "/root/testdata/sf0.1"
 
 
+def suffix_tokens(text: str, suf: str) -> str:
+    """Suffix every space-separated token, keeping the spaces: the
+    whitespace-token count is unchanged and replicas share no token."""
+    return " ".join(tok + suf for tok in text.split(" "))
+
+
 def main() -> int:
     out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scale20"
     rep = int(sys.argv[2]) if len(sys.argv) > 2 else 20
@@ -54,10 +60,7 @@ def main() -> int:
     for k in range(rep):
         suf = f"-k{k}"
         for i, t, lg, s in zip(ids, texts, langs, srcs):
-            t2 = suf.join(t.split(" ")) if isinstance(t, str) else t
-            # suffix every token (join on spaces puts the tag at each
-            # token boundary; the final token gets it explicitly)
-            t2 = (t2 + suf) if isinstance(t2, str) else t2
+            t2 = suffix_tokens(t, suf) if isinstance(t, str) else t
             all_ids.append(k * 20_000_000 + i)
             all_text.append(t2)
             all_lang.append(lg)
